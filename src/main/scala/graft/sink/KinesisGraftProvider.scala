@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.util
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,8 +19,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource-v2 sink: `df.writeStream.format("kinesis-graft")` /
   * `df.write.format("kinesis-graft")` — the v1 ergonomics layer over the
-  * same per-task [[KinesisRecordWriter]] data plane the foreachBatch
-  * adapter uses (SURVEY.md §7.2 component 3).
+  * same per-task [[KinesisTaskRouter]] the foreachBatch adapter uses
+  * (SURVEY.md §7.2 component 3). Unlike that adapter it has no
+  * dead-letter queue, so `dead_letter_path` is rejected.
   *
   * Option surface mirrors the reference's Viper config
   * (/root/reference/utils.go:23-46, README.md:51-55) via
@@ -73,14 +73,8 @@ private final class KinesisGraftTable(schema: StructType)
   // (batchproducer.go:49-66).
   private[sink] val totals = new AtomicReference(WriteStats())
 
-  override def metrics(): util.Map[String, String] = {
-    val t = totals.get()
-    Map(
-      "recordsSent" -> t.recordsSent.toString,
-      "recordsDropped" -> t.recordsDropped.toString,
-      "kinesisErrors" -> t.kinesisErrors.toString,
-      "putRequests" -> t.putRequests.toString).asJava
-  }
+  override def metrics(): util.Map[String, String] =
+    totals.get().named.map { case (n, v) => n -> v.toString }.toMap.asJava
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
@@ -95,6 +89,8 @@ private final class KinesisGraftTable(schema: StructType)
     val hasStreamCol = s.fieldNames.contains("stream")
     require(hasStreamCol || opts.stream.isDefined,
       "kinesis-graft needs a 'stream' column or a 'stream' option")
+    require(opts.deadLetterPath.isEmpty, "kinesis-graft has no dead-letter " +
+      "queue; write through KinesisSink.write/start to use dead_letter_path")
     new KinesisGraftWriteBuilder(s, opts, totals)
   }
 }
@@ -112,38 +108,29 @@ private final class KinesisGraftWriteBuilder(
   }
 }
 
-/** Declared sink metrics (driver side): Spark sums the per-task values. */
+/** Declared sink metrics (driver side): Spark sums the per-task values.
+  * Spark re-creates a v2 custom metric from its class name, so each
+  * counter keeps its own no-argument class.
+  */
 private object GraftMetric {
-  final class Sent extends CustomSumMetric {
-    override def name(): String = "recordsSent"
-    override def description(): String = "records delivered to Kinesis"
+  sealed abstract class Sum(index: Int, desc: String) extends CustomSumMetric {
+    override def name(): String = WriteStats.names(index)
+    override def description(): String = desc
   }
-  final class Dropped extends CustomSumMetric {
-    override def name(): String = "recordsDropped"
-    override def description(): String = "records dropped after retry caps"
-  }
-  final class Errors extends CustomSumMetric {
-    override def name(): String = "kinesisErrors"
-    override def description(): String = "PutRecords request failures"
-  }
-  final class Requests extends CustomSumMetric {
-    override def name(): String = "putRequests"
-    override def description(): String = "PutRecords requests issued"
-  }
+  final class Sent extends Sum(0, "records delivered to Kinesis")
+  final class Dropped extends Sum(1, "records dropped after retry caps")
+  final class Errors extends Sum(2, "PutRecords request failures")
+  final class Requests extends Sum(3, "PutRecords requests issued")
   def all: Array[CustomMetric] =
     Array(new Sent, new Dropped, new Errors, new Requests)
 
-  def task(stats: WriteStats): Array[CustomTaskMetric] = Array(
-    metric("recordsSent", stats.recordsSent),
-    metric("recordsDropped", stats.recordsDropped),
-    metric("kinesisErrors", stats.kinesisErrors),
-    metric("putRequests", stats.putRequests))
-
-  private def metric(n: String, v: Long): CustomTaskMetric =
-    new CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
+  def task(stats: WriteStats): Array[CustomTaskMetric] =
+    stats.named.map { case (n, v) =>
+      new CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+    }.toArray[CustomTaskMetric]
 }
 
 private final case class GraftCommitMessage(stats: WriteStats)
@@ -191,60 +178,30 @@ private final class GraftWriterFactory(schema: StructType,
     new GraftDataWriter(schema, opts)
 }
 
-/** Per-task writer: routes rows to per-stream buffers (≤batchSize in
-  * memory per stream) and flushes through [[KinesisRecordWriter]] — the
-  * same O(streams · batchSize) task-memory bound as the foreachBatch
-  * path, so a 100 TB write is just more tasks, not more state.
+/** Per-task DSv2 writer: extracts `(stream, partitionKey, data)` from
+  * each row and delivers through a [[KinesisTaskRouter]].
   */
 private final class GraftDataWriter(schema: StructType,
     opts: KinesisSinkOptions) extends DataWriter[InternalRow] {
-  private val client = KinesisSinkOptions.resolveClient(opts)
+  private val router = KinesisTaskRouter(opts)
   private val streamIdx = schema.fieldNames.indexOf("stream")
   private val pkIdx = schema.fieldNames.indexOf("partitionKey")
   private val dataIdx = schema.fieldNames.indexOf("data")
 
-  private var stats = WriteStats()
-  private val writers = mutable.Map.empty[String, KinesisRecordWriter]
-  private val buffers =
-    mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[KinesisRecord]]
+  // By-name append fills absent nullable columns with nulls, so a query
+  // without a stream or partitionKey column arrives here as null values;
+  // the router's fallbacks handle both.
+  private def string(row: InternalRow, i: Int): String =
+    if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString
 
-  private def flush(stream: String): Unit = {
-    val buf = buffers(stream)
-    if (buf.nonEmpty) {
-      val w = writers.getOrElseUpdate(stream,
-        new KinesisRecordWriter(client, stream, opts.writer))
-      stats = stats + w.write(buf.iterator)
-      buf.clear()
-    }
-  }
+  override def write(row: InternalRow): Unit =
+    router.add(string(row, streamIdx), string(row, pkIdx),
+      row.getBinary(dataIdx))
 
-  override def write(row: InternalRow): Unit = {
-    // NB: by-name append fills absent nullable columns with nulls, so a
-    // query without a stream column arrives here as null, not as a
-    // missing field — the option fallback must handle both.
-    val stream =
-      if (streamIdx >= 0 && !row.isNullAt(streamIdx))
-        row.getUTF8String(streamIdx).toString
-      else opts.stream.getOrElse(throw new IllegalArgumentException(
-        "record has null 'stream' and no default stream option is set"))
-    val pk =
-      if (pkIdx >= 0 && !row.isNullAt(pkIdx))
-        row.getUTF8String(pkIdx).toString
-      else util.UUID.randomUUID().toString // utils.go:15-19
-    val buf = buffers.getOrElseUpdate(stream,
-      new mutable.ArrayBuffer[KinesisRecord](opts.writer.batchSize))
-    buf += KinesisRecord(pk, row.getBinary(dataIdx))
-    if (buf.size >= opts.writer.batchSize) flush(stream)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    buffers.keys.foreach(flush)
-    GraftCommitMessage(stats)
-  }
-
-  override def abort(): Unit = buffers.clear()
+  override def commit(): WriterCommitMessage = GraftCommitMessage(router.flush())
+  override def abort(): Unit = ()
   override def close(): Unit = ()
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftMetric.task(stats)
+    GraftMetric.task(router.stats)
 }

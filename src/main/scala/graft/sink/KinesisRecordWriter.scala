@@ -1,5 +1,10 @@
 package graft.sink
 
+import java.util.UUID
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.internal.Logging
+
 /** Writer configuration, mirroring the reference's `Config` knobs and
   * defaults (/root/reference/batchproducer/batchproducer.go:73-124):
   * batch ≤500 (Kinesis API cap, :14-15, validated :143-145), default
@@ -39,6 +44,17 @@ final case class WriteStats(
   def +(o: WriteStats): WriteStats = WriteStats(
     recordsSent + o.recordsSent, recordsDropped + o.recordsDropped,
     kinesisErrors + o.kinesisErrors, putRequests + o.putRequests)
+
+  /** `(metric name, value)` per counter: the one list of names both sink
+    * surfaces publish (accumulators, DSv2 task and sink metrics).
+    */
+  def named: Seq[(String, Long)] = Seq("recordsSent" -> recordsSent,
+    "recordsDropped" -> recordsDropped, "kinesisErrors" -> kinesisErrors,
+    "putRequests" -> putRequests)
+}
+
+object WriteStats {
+  val names: Seq[String] = WriteStats().named.map(_._1)
 }
 
 /** Async error reporting seam, mirroring the reference's `Events()`
@@ -55,8 +71,8 @@ object KinesisEventListener {
 }
 
 /** The data plane of the reference's batch producer, re-expressed as a
-  * pure per-task function `Iterator[KinesisRecord] → WriteStats` — this
-  * is what runs inside a Spark `DataWriter`/`foreachBatch` partition.
+  * pure per-task function `Iterator[KinesisRecord] → WriteStats` — the
+  * [[KinesisTaskRouter]] of each write task runs one per stream.
   *
   * Semantics preserved from the reference:
   *  - micro-batching ≤ `batchSize` ≤ 500 records per `PutRecords`
@@ -184,4 +200,80 @@ private object KinesisRecordWriter {
     */
   private[sink] val noDeadLetter: (KinesisRecord, String) => Unit =
     (_, _) => ()
+}
+
+/** One write task's delivery core, shared by both sink surfaces
+  * ([[KinesisSink]]'s foreachBatch path and the DSv2 writer). It routes
+  * `(stream, partitionKey, data)` values into per-stream buffers of at
+  * most `batchSize` records, each flushed through that stream's own
+  * [[KinesisRecordWriter]], so task memory is O(streams · batchSize)
+  * whatever the partition size. A null `stream` goes to the `stream`
+  * option's default; a null `partitionKey` gets a fresh UUIDv4
+  * (utils.go:15-19). Request errors are logged as warnings, and every
+  * record delivery gives up on reaches `deadLetter` with its stream and
+  * reason.
+  */
+private[sink] final class KinesisTaskRouter(
+    client: KinesisPutRecords,
+    config: KinesisWriterConfig,
+    defaultStream: Option[String],
+    deadLetter: (String, KinesisRecord, String) => Unit,
+    sleep: Long => Unit = Thread.sleep) {
+  import KinesisTaskRouter.Lane
+
+  private val fallbackStream = defaultStream.orNull
+  // insertion order: the final flush visits streams in first-seen order
+  private val lanes = new java.util.LinkedHashMap[String, Lane]()
+  private var total = WriteStats()
+
+  /** Everything this task has sent, dropped and requested so far. */
+  def stats: WriteStats = total
+
+  def add(stream: String, partitionKey: String, data: Array[Byte]): Unit = {
+    val s = if (stream != null) stream else fallbackStream
+    var lane = lanes.get(s)
+    if (lane == null) lane = open(s)
+    lane.buf += KinesisRecord(
+      if (partitionKey != null) partitionKey else UUID.randomUUID().toString,
+      data)
+    if (lane.buf.size >= config.batchSize) drain(lane)
+  }
+
+  /** Flush every stream's buffer; returns the task's total stats. */
+  def flush(): WriteStats = {
+    lanes.values.forEach(drain(_))
+    total
+  }
+
+  // The per-row path stays small; a new stream, or a null one with no
+  // default, is handled here.
+  private def open(stream: String): Lane = {
+    if (stream == null) throw new IllegalArgumentException(
+      "record has null 'stream' and no default stream option is set")
+    val lane = new Lane(new KinesisRecordWriter(client, stream, config,
+      KinesisTaskRouter.warn, sleep, (r, why) => deadLetter(stream, r, why)),
+      new ArrayBuffer[KinesisRecord](config.batchSize))
+    lanes.put(stream, lane)
+    lane
+  }
+
+  private def drain(lane: Lane): Unit = if (lane.buf.nonEmpty) {
+    total = total + lane.writer.write(lane.buf.iterator)
+    lane.buf.clear()
+  }
+}
+
+private[sink] object KinesisTaskRouter extends Logging {
+  private final class Lane(val writer: KinesisRecordWriter,
+      val buf: ArrayBuffer[KinesisRecord])
+
+  private val warn: KinesisEventListener =
+    msg => logWarning(s"kinesis-sink: $msg")
+
+  /** The router for a task writing with sink options `o`. */
+  def apply(o: KinesisSinkOptions,
+      deadLetter: (String, KinesisRecord, String) => Unit =
+        (_, _, _) => ()): KinesisTaskRouter =
+    new KinesisTaskRouter(KinesisSinkOptions.resolveClient(o), o.writer,
+      o.stream, deadLetter)
 }

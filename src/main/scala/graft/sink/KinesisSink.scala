@@ -27,9 +27,8 @@ import org.apache.spark.util.LongAccumulator
   *    checkpoint; delivery stays at-least-once across the replayed epoch.
   *
   * Scale posture: no driver-side per-record state; every record is
-  * handled inside its partition's task, stats travel on accumulators
-  * (Spark sums them natively across 1000s of tasks), and a batch never
-  * holds more than `batchSize` records in memory per stream per task.
+  * handled inside its partition's task, and stats travel on accumulators
+  * (Spark sums them natively across 1000s of tasks).
   */
 object KinesisSink extends Logging {
 
@@ -41,16 +40,21 @@ object KinesisSink extends Logging {
       val recordsSent: LongAccumulator,
       val recordsDropped: LongAccumulator,
       val kinesisErrors: LongAccumulator,
-      val putRequests: LongAccumulator) extends Serializable
+      val putRequests: LongAccumulator) extends Serializable {
+    /** Add one task's totals. */
+    def add(s: WriteStats): Unit = {
+      recordsSent.add(s.recordsSent)
+      recordsDropped.add(s.recordsDropped)
+      kinesisErrors.add(s.kinesisErrors)
+      putRequests.add(s.putRequests)
+    }
+  }
 
   object Metrics {
-    def register(spark: SparkSession, prefix: String = "graft.kinesis"): Metrics = {
-      val sc = spark.sparkContext
-      new Metrics(
-        sc.longAccumulator(s"$prefix.recordsSent"),
-        sc.longAccumulator(s"$prefix.recordsDropped"),
-        sc.longAccumulator(s"$prefix.kinesisErrors"),
-        sc.longAccumulator(s"$prefix.putRequests"))
+    def register(spark: SparkSession): Metrics = {
+      val Seq(sent, dropped, errors, requests) = WriteStats.names
+        .map(n => spark.sparkContext.longAccumulator(s"graft.kinesis.$n"))
+      new Metrics(sent, dropped, errors, requests)
     }
   }
 
@@ -83,50 +87,24 @@ object KinesisSink extends Logging {
   final case class DeadLetterRow(stream: String, partitionKey: String,
       data: Array[Byte], reason: String)
 
-  /** Per-partition delivery core; returns the dead-lettered records
-    * (strictly — delivery completes before the iterator is handed
-    * back; the buffer holds only DROPPED records, bounded by the
-    * admission-bounded batch). Shared by both [[writeBatch]] actions.
+  /** Delivers one partition through a [[KinesisTaskRouter]]; returns the
+    * dead-lettered records (strictly — delivery completes before the
+    * iterator is handed back; the buffer holds only DROPPED records,
+    * bounded by the admission-bounded batch). Shared by both
+    * [[writeBatch]] actions.
     */
   private def deliverPartition(rows: Iterator[Row], o: KinesisSinkOptions,
       m: Metrics): Iterator[DeadLetterRow] = {
-    val client = KinesisSinkOptions.resolveClient(o)
-    val listener: KinesisEventListener = new KinesisEventListener {
-      override def onError(msg: String): Unit = logWarning(s"kinesis-sink: $msg")
-    }
     val dropped = mutable.ArrayBuffer.empty[DeadLetterRow]
-    val writers = mutable.Map.empty[String, KinesisRecordWriter]
-    val buffers = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[KinesisRecord]]
-    def flush(stream: String): Unit = {
-      val buf = buffers(stream)
-      if (buf.nonEmpty) {
-        val w = writers.getOrElseUpdate(stream,
-          new KinesisRecordWriter(client, stream, o.writer, listener,
-            deadLetter = (r, why) =>
-              dropped += DeadLetterRow(stream, r.partitionKey, r.data, why)))
-        val stats = w.write(buf.iterator)
-        m.recordsSent.add(stats.recordsSent)
-        m.recordsDropped.add(stats.recordsDropped)
-        m.kinesisErrors.add(stats.kinesisErrors)
-        m.putRequests.add(stats.putRequests)
-        buf.clear()
-      }
-    }
-    rows.foreach { r =>
-      val stream = r.getString(0)
-      val buf = buffers.getOrElseUpdate(stream,
-        new mutable.ArrayBuffer[KinesisRecord](o.writer.batchSize))
-      buf += KinesisRecord(r.getString(1), r.getAs[Array[Byte]](2))
-      if (buf.size >= o.writer.batchSize) flush(stream)
-    }
-    buffers.keys.foreach(flush)
+    val router = KinesisTaskRouter(o, (stream, r, why) =>
+      dropped += DeadLetterRow(stream, r.partitionKey, r.data, why))
+    rows.foreach(r =>
+      router.add(r.getString(0), r.getString(1), r.getAs[Array[Byte]](2)))
+    m.add(router.flush())
     dropped.iterator
   }
 
-  /** Write one (micro-)batch. Runs one [[KinesisRecordWriter]] flush per
-    * stream per partition; per-stream buffers hold at most `batchSize`
-    * rows, so task memory is O(streams · batchSize) regardless of
-    * partition size.
+  /** Write one (micro-)batch, each partition through its own router.
     *
     * With `dead_letter_path` configured, the SAME delivery pass runs as
     * a `mapPartitions` whose action is a parquet append of the

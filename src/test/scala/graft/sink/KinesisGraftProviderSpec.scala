@@ -7,45 +7,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** The DSv2 `format("kinesis-graft")` surface: batch + streaming writes,
-  * option validation at plan time, uuid key generation, dynamic routing,
-  * and sink metrics in StreamingQueryProgress.
+/** The DSv2 `format("kinesis-graft")` surface: streaming writes and
+  * restart, option validation at plan time, and sink metrics in
+  * StreamingQueryProgress. What it shares with [[KinesisSink]] (round
+  * trips, routing, fallbacks, counters) is checked in `SinkSurfacesSpec`.
   */
 class KinesisGraftProviderSpec extends SparkTestBase {
-
-  test("batch write via format(kinesis-graft)") {
-    val fake = FakeKinesis.named("dsv2-batch")
-    fake.clear()
-    import spark.implicits._
-    (0 until 777).map(i => s"p$i").toDF("s")
-      .select(col("s").cast("binary").as("data"))
-      .write.format("kinesis-graft")
-      .option("aws_region_name", "us-east-1")
-      .option("stream", "b-topic")
-      .option("client", "fake:dsv2-batch")
-      .mode("append")
-      .save()
-    assert(fake.storedPayloads("b-topic").sorted ==
-      (0 until 777).map(i => s"p$i").sorted)
-  }
-
-  test("dynamic routing + explicit partition keys via stream/partitionKey " +
-      "columns") {
-    val fake = FakeKinesis.named("dsv2-route")
-    fake.clear()
-    import spark.implicits._
-    (0 until 40).map(i => (s"t${i % 2}", s"k$i", s"v$i"))
-      .toDF("stream", "partitionKey", "s")
-      .select(col("stream"), col("partitionKey"),
-        col("s").cast("binary").as("data"))
-      .write.format("kinesis-graft")
-      .option("aws_region_name", "us-east-1")
-      .option("client", "fake:dsv2-route")
-      .mode("append").save()
-    assert(fake.streamNames == Set("t0", "t1"))
-    assert(fake.stored("t0").map(_.partitionKey).forall(k =>
-      k.stripPrefix("k").toInt % 2 == 0))
-  }
 
   test("streaming write reports sink CustomMetrics in progress " +
       "(StatsBatch parity, batchproducer.go:58-66)") {
@@ -121,5 +88,24 @@ class KinesisGraftProviderSpec extends SparkTestBase {
     val messages = Iterator.iterate(e2: Throwable)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     assert(messages.contains("no default stream option"), messages)
+  }
+
+  test("dead_letter_path is rejected before any task runs") {
+    val fake = FakeKinesis.named("dsv2-dlq")
+    fake.clear()
+    fake.requestCount.set(0)
+    import spark.implicits._
+    val e = intercept[Exception] {
+      Seq("x").toDF("s").select(col("s").cast("binary").as("data"))
+        .write.format("kinesis-graft")
+        .option("aws_region_name", "r").option("stream", "s")
+        .option("client", "fake:dsv2-dlq")
+        .option("dead_letter_path", Files.createTempDirectory("dsv2-dlq").toString)
+        .mode("append").save()
+    }
+    val messages = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(messages.contains("KinesisSink.write/start"), messages)
+    assert(fake.requestCount.get() == 0 && fake.streamNames.isEmpty)
   }
 }

@@ -43,36 +43,6 @@ class KinesisSinkSpec extends SparkTestBase {
     }
   }
 
-  test("batch write round-trip: multiset equality like TestSend " +
-      "(integration_test.go:159-173)") {
-    val fake = FakeKinesis.named("rt1")
-    fake.clear()
-    val msgs = (0 until 1234).map(i => s"msg-$i")
-    val m = KinesisSink.write(payloads(msgs),
-      Map("aws_region_name" -> "us-east-1", "stream" -> "topic-a",
-        "client" -> "fake:rt1"))
-    assert(fake.storedPayloads("topic-a").sorted == msgs.sorted)
-    assert(m.recordsSent.value == 1234 && m.recordsDropped.value == 0)
-    // ≤500/request ⇒ at least ceil(1234/500) requests
-    assert(m.putRequests.value >= 3)
-  }
-
-  test("dynamic multi-topic routing via stream column (sink.go:66-77's " +
-      "per-topic producers)") {
-    val fake = FakeKinesis.named("rt2")
-    fake.clear()
-    import spark.implicits._
-    val df = (0 until 100).map(i => (s"t${i % 3}", s"m$i")).toDF("stream", "s")
-      .select(col("stream"), col("s").cast("binary").as("data"))
-    KinesisSink.write(df,
-      Map("aws_region_name" -> "us-east-1", "client" -> "fake:rt2"))
-    assert(fake.streamNames == Set("t0", "t1", "t2"))
-    val got = (0 until 3).flatMap(t => fake.storedPayloads(s"t$t"))
-    assert(got.sorted == (0 until 100).map(i => s"m$i").sorted)
-    assert(fake.storedPayloads("t1").forall(m =>
-      m.stripPrefix("m").toInt % 3 == 1), "record routed to wrong stream")
-  }
-
   test("streaming TestSend parity: memory source → sink → stop → verify") {
     val fake = FakeKinesis.named("rt3")
     fake.clear()
