@@ -32,9 +32,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `StreamingQueryProgress.sink.metrics`.
   *
   * Input schema contract (same as [[KinesisSink.toWire]]'s output):
-  * `data binary` required; `partitionKey string` optional (fresh UUIDv4
-  * per record when absent — utils.go:15-19); `stream string` optional
-  * when the `stream` option names a default.
+  * `data binary` required; `partitionKey string` optional (a UUIDv4 per
+  * record when absent or null — utils.go:15-19 — generated in the task,
+  * seeded per write, per partition and, when streaming, per epoch);
+  * `stream string` optional when the `stream` option names a default.
+  * A retried task re-sends the keys it generated before; a streaming
+  * epoch replayed after a restart gets new ones, because the restarted
+  * query draws a new write seed.
   */
 final class KinesisGraftProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kinesis-graft"
@@ -91,20 +95,9 @@ private final class KinesisGraftTable(schema: StructType)
       "kinesis-graft needs a 'stream' column or a 'stream' option")
     require(opts.deadLetterPath.isEmpty, "kinesis-graft has no dead-letter " +
       "queue; write through KinesisSink.write/start to use dead_letter_path")
-    new KinesisGraftWriteBuilder(s, opts, totals)
-  }
-}
-
-private final class KinesisGraftWriteBuilder(
-    schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends WriteBuilder {
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new KinesisGraftBatchWrite(schema, opts, totals)
-    override def toStreaming: StreamingWrite =
-      new KinesisGraftStreamingWrite(schema, opts, totals)
-    override def supportedCustomMetrics(): Array[CustomMetric] =
-      GraftMetric.all
+    new WriteBuilder {
+      override def build(): Write = new KinesisGraftWrite(s, opts, totals)
+    }
   }
 }
 
@@ -145,45 +138,56 @@ private object GraftCommitMessage {
   }
 }
 
-private final class KinesisGraftBatchWrite(
+/** One DSv2 write, batch or streaming. Its key seed is drawn once, here,
+  * before any task runs, so every task of the write (every epoch, for a
+  * streaming query run) derives its keys from it.
+  */
+private final class KinesisGraftWrite(
     schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends BatchWrite {
+    totals: AtomicReference[WriteStats])
+    extends Write with BatchWrite with StreamingWrite {
+  private val factory =
+    new GraftWriterFactory(schema, opts, KinesisTaskRouter.newWriteSeed())
+
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  override def supportedCustomMetrics(): Array[CustomMetric] = GraftMetric.all
+  // both interfaces default this to true; the class must pick one
+  override def useCommitCoordinator(): Boolean = true
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(schema, opts)
+    factory
+  override def createStreamingWriterFactory(
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = factory
+
+  // By the time tasks report, their records are flushed — the
+  // Flush-on-Close drain (sink.go:111-126) is implicit per batch/epoch.
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftCommitMessage.addTo(totals, messages)
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private final class KinesisGraftStreamingWrite(
-    schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends StreamingWrite {
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftWriterFactory(schema, opts)
-  // Epoch commit: by the time tasks report, their records are flushed —
-  // the Flush-on-Close drain (sink.go:111-126) is implicit per epoch.
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     GraftCommitMessage.addTo(totals, messages)
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 private final class GraftWriterFactory(schema: StructType,
-    opts: KinesisSinkOptions)
+    opts: KinesisSinkOptions, writeSeed: Long)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(schema, opts)
+    new GraftDataWriter(schema, KinesisTaskRouter(opts, writeSeed, partitionId))
+  // Each epoch of a streaming run gets its own keys: its id is mixed
+  // into the write seed.
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(schema, opts)
+    new GraftDataWriter(schema,
+      KinesisTaskRouter(opts, writeSeed + epochId, partitionId))
 }
 
 /** Per-task DSv2 writer: extracts `(stream, partitionKey, data)` from
-  * each row and delivers through a [[KinesisTaskRouter]].
+  * each row and delivers through its partition's [[KinesisTaskRouter]].
   */
 private final class GraftDataWriter(schema: StructType,
-    opts: KinesisSinkOptions) extends DataWriter[InternalRow] {
-  private val router = KinesisTaskRouter(opts)
+    router: KinesisTaskRouter) extends DataWriter[InternalRow] {
   private val streamIdx = schema.fieldNames.indexOf("stream")
   private val pkIdx = schema.fieldNames.indexOf("partitionKey")
   private val dataIdx = schema.fieldNames.indexOf("data")
@@ -198,6 +202,16 @@ private final class GraftDataWriter(schema: StructType,
     router.add(string(row, streamIdx), string(row, pkIdx),
       row.getBinary(dataIdx))
 
+  // Spark reads currentMetricsValues() after writeAll and before
+  // commit(), so the final flush belongs here for the SQL metrics to
+  // count each partition's last batch.
+  override def writeAll(rows: java.util.Iterator[InternalRow]): Unit = {
+    while (rows.hasNext) write(rows.next())
+    router.flush()
+  }
+
+  // A no-op flush after writeAll; it delivers the rest for a caller
+  // that feeds rows through write() alone.
   override def commit(): WriterCommitMessage = GraftCommitMessage(router.flush())
   override def abort(): Unit = ()
   override def close(): Unit = ()

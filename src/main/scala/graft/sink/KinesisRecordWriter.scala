@@ -1,9 +1,10 @@
 package graft.sink
 
-import java.util.UUID
+import java.util.concurrent.ThreadLocalRandom
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.internal.Logging
+import org.apache.spark.sql.catalyst.util.RandomUUIDGenerator
 
 /** Writer configuration, mirroring the reference's `Config` knobs and
   * defaults (/root/reference/batchproducer/batchproducer.go:73-124):
@@ -208,20 +209,27 @@ private object KinesisRecordWriter {
   * most `batchSize` records, each flushed through that stream's own
   * [[KinesisRecordWriter]], so task memory is O(streams · batchSize)
   * whatever the partition size. A null `stream` goes to the `stream`
-  * option's default; a null `partitionKey` gets a fresh UUIDv4
-  * (utils.go:15-19). Request errors are logged as warnings, and every
-  * record delivery gives up on reaches `deadLetter` with its stream and
-  * reason.
+  * option's default. A null `partitionKey` gets a UUIDv4 string
+  * (utils.go:15-19) from Spark's `RandomUUIDGenerator`, seeded by
+  * [[KinesisTaskRouter.keySeed]] from the write's seed and the task's
+  * partition id: a retried task regenerates the same keys, and no task
+  * waits on the JVM-wide `SecureRandom`. Request errors are logged as
+  * warnings, and every record delivery gives up on reaches `deadLetter`
+  * with its stream, generated key and reason.
   */
 private[sink] final class KinesisTaskRouter(
     client: KinesisPutRecords,
     config: KinesisWriterConfig,
     defaultStream: Option[String],
+    writeSeed: Long,
+    partitionId: Int,
     deadLetter: (String, KinesisRecord, String) => Unit,
     sleep: Long => Unit = Thread.sleep) {
   import KinesisTaskRouter.Lane
 
   private val fallbackStream = defaultStream.orNull
+  private val keys =
+    RandomUUIDGenerator(KinesisTaskRouter.keySeed(writeSeed, partitionId))
   // insertion order: the final flush visits streams in first-seen order
   private val lanes = new java.util.LinkedHashMap[String, Lane]()
   private var total = WriteStats()
@@ -234,7 +242,7 @@ private[sink] final class KinesisTaskRouter(
     var lane = lanes.get(s)
     if (lane == null) lane = open(s)
     lane.buf += KinesisRecord(
-      if (partitionKey != null) partitionKey else UUID.randomUUID().toString,
+      if (partitionKey != null) partitionKey else keys.getNextUUID().toString,
       data)
     if (lane.buf.size >= config.batchSize) drain(lane)
   }
@@ -270,10 +278,26 @@ private[sink] object KinesisTaskRouter extends Logging {
   private val warn: KinesisEventListener =
     msg => logWarning(s"kinesis-sink: $msg")
 
-  /** The router for a task writing with sink options `o`. */
-  def apply(o: KinesisSinkOptions,
+  /** A write's key seed, drawn once per write before its tasks run (per
+    * micro-batch on the foreachBatch path).
+    */
+  def newWriteSeed(): Long = ThreadLocalRandom.current().nextLong()
+
+  /** The key generator's seed for one partition of a write: the write
+    * seed times an odd constant, plus the partition id. A plain sum
+    * would give seed s, partition p+1 the keys of seed s+1, partition p;
+    * the multiplier keeps any two writes whose seeds differ by less than
+    * 2^24 apart for every pair of partition ids.
+    */
+  def keySeed(writeSeed: Long, partitionId: Int): Long =
+    writeSeed * 0x9E3779B97F4A7C15L + partitionId
+
+  /** The router for partition `partitionId` of a write seeded with
+    * `writeSeed`, with sink options `o`.
+    */
+  def apply(o: KinesisSinkOptions, writeSeed: Long, partitionId: Int,
       deadLetter: (String, KinesisRecord, String) => Unit =
         (_, _, _) => ()): KinesisTaskRouter =
     new KinesisTaskRouter(KinesisSinkOptions.resolveClient(o), o.writer,
-      o.stream, deadLetter)
+      o.stream, writeSeed, partitionId, deadLetter)
 }

@@ -2,6 +2,7 @@ package graft.sink
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,7 +18,8 @@ import org.apache.spark.util.LongAccumulator
   *    a per-row `stream` column (dynamic routing — the per-topic producer
   *    map becomes per-stream grouping inside each write task);
   *  - UUIDv4 partition keys sprayed per message (utils.go:15-19) →
-  *    `uuid()` projected when no partitionKey column exists;
+  *    generated in each write task when no partitionKey is given,
+  *    seeded per write (per micro-batch for `start`) and per partition;
   *  - the per-topic producer goroutine and its dual trigger
   *    (batchproducer.go:244-261) → micro-batch trigger supplies the time
   *    axis, in-task chunking ≤500 supplies the size axis;
@@ -60,9 +62,11 @@ object KinesisSink extends Logging {
 
   /** Normalize any input frame to the wire schema
     * `(stream string, partitionKey string, data binary)`:
-    * missing partitionKey → fresh `uuid()` per row (utils.go:15-19);
-    * missing stream column → the query-level default; string `data` is
-    * cast to binary (the reference's payloads are opaque bytes).
+    * missing partitionKey → null, which the write task replaces with a
+    * UUIDv4 (utils.go:15-19; see [[KinesisTaskRouter]]); missing stream
+    * column → the query-level default; string `data` is cast to binary
+    * (the reference's payloads are opaque bytes). The projection is
+    * deterministic, so its generated code is compiled once and reused.
     */
   def toWire(df: DataFrame, defaultStream: Option[String]): DataFrame = {
     val cols = df.columns.toSet
@@ -74,7 +78,7 @@ object KinesisSink extends Logging {
           "no 'stream' column and no default stream option"))))
     val withPk =
       if (cols.contains("partitionKey")) withStream
-      else withStream.withColumn("partitionKey", expr("uuid()"))
+      else withStream.withColumn("partitionKey", lit(null).cast(StringType))
     withPk.select(
       col("stream").cast(StringType),
       col("partitionKey").cast(StringType),
@@ -90,14 +94,16 @@ object KinesisSink extends Logging {
   /** Delivers one partition through a [[KinesisTaskRouter]]; returns the
     * dead-lettered records (strictly — delivery completes before the
     * iterator is handed back; the buffer holds only DROPPED records,
-    * bounded by the admission-bounded batch). Shared by both
-    * [[writeBatch]] actions.
+    * bounded by the admission-bounded batch), with the keys they were
+    * sent under, generated ones included. Shared by both [[writeBatch]]
+    * actions.
     */
   private def deliverPartition(rows: Iterator[Row], o: KinesisSinkOptions,
-      m: Metrics): Iterator[DeadLetterRow] = {
+      m: Metrics, writeSeed: Long): Iterator[DeadLetterRow] = {
     val dropped = mutable.ArrayBuffer.empty[DeadLetterRow]
-    val router = KinesisTaskRouter(o, (stream, r, why) =>
-      dropped += DeadLetterRow(stream, r.partitionKey, r.data, why))
+    val router = KinesisTaskRouter(o, writeSeed, TaskContext.getPartitionId(),
+      (stream, r, why) =>
+        dropped += DeadLetterRow(stream, r.partitionKey, r.data, why))
     rows.foreach(r =>
       router.add(r.getString(0), r.getString(1), r.getAs[Array[Byte]](2)))
     m.add(router.flush())
@@ -105,6 +111,9 @@ object KinesisSink extends Logging {
   }
 
   /** Write one (micro-)batch, each partition through its own router.
+    * Missing keys are seeded from one seed drawn here, so a retried task
+    * re-sends the keys it sent before; a replayed micro-batch draws a
+    * new seed and so gets new keys.
     *
     * With `dead_letter_path` configured, the SAME delivery pass runs as
     * a `mapPartitions` whose action is a parquet append of the
@@ -117,18 +126,21 @@ object KinesisSink extends Logging {
     * Micro-batches append small files — `Layout.compact` is the
     * maintenance op.
     */
-  def writeBatch(wire: DataFrame, o: KinesisSinkOptions, m: Metrics): Unit =
+  def writeBatch(wire: DataFrame, o: KinesisSinkOptions, m: Metrics): Unit = {
+    val seed = KinesisTaskRouter.newWriteSeed()
     o.deadLetterPath match {
       case None =>
         wire.foreachPartition { rows: Iterator[Row] =>
-          deliverPartition(rows, o, m).foreach(_ => ()) // drops counted only
+          // drops counted only
+          deliverPartition(rows, o, m, seed).foreach(_ => ())
         }
       case Some(path) =>
         import org.apache.spark.sql.Encoders
-        wire.mapPartitions(rows => deliverPartition(rows, o, m))(
+        wire.mapPartitions(rows => deliverPartition(rows, o, m, seed))(
             Encoders.product[DeadLetterRow])
           .write.mode("append").parquet(path)
     }
+  }
 
   /** Batch-mode write (the library surface for non-streaming callers). */
   def write(df: DataFrame, options: Map[String, String]): Metrics = {

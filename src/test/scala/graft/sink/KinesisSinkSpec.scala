@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.sink.KinesisTaskRouterSpec.UuidV4
 import graft.streaming.GraftQueryEvents
 
 /** Round-trip parity with the reference's integration suite
@@ -28,9 +29,26 @@ class KinesisSinkSpec extends SparkTestBase {
     val rows = wire.collect()
     assert(wire.columns.toSeq == Seq("stream", "partitionKey", "data"))
     assert(rows.map(_.getString(0)).forall(_ == "t"))
-    val pks = rows.map(_.getString(1))
-    assert(pks.distinct.length == 3, "partition keys must be unique uuids")
-    assert(pks.forall(_.matches("[0-9a-f-]{36}")))
+    assert(rows.forall(_.isNullAt(1)), "keys are generated by the write task")
+    val fake = FakeKinesis.named("towire")
+    fake.clear()
+    KinesisSink.write(payloads(Seq("a", "b", "c")), Map(
+      "aws_region_name" -> "us-east-1", "stream" -> "t",
+      "client" -> "fake:towire"))
+    val pks = fake.stored("t").map(_.partitionKey)
+    assert(pks.size == 3 && pks.distinct.size == 3,
+      "partition keys must be unique uuids")
+    assert(pks.forall(_.matches(UuidV4)), pks)
+  }
+
+  test("toWire on keyless input is deterministic: no per-call uuid() " +
+      "seed, so its generated code is compiled once") {
+    import org.apache.spark.sql.catalyst.expressions.Nondeterministic
+    val plan = KinesisSink.toWire(payloads(Seq("a")), Some("t"))
+      .queryExecution.analyzed
+    val nondeterministic = plan.flatMap(_.expressions)
+      .flatMap(_.collect { case n: Nondeterministic => n })
+    assert(nondeterministic.isEmpty, plan.treeString)
   }
 
   test("toWire rejects input without data column / without any stream") {
@@ -195,12 +213,18 @@ class KinesisSinkSpec extends SparkTestBase {
     KinesisSink.write(df, opts)
     assert(fake.storedPayloads("topic-f").isEmpty &&
       spark.read.parquet(dlq).count() == 2, "precondition: all shed")
+    val quarantinedKeys = spark.read.parquet(dlq).select($"partitionKey")
+      .as[String].collect().toSeq
+    assert(quarantinedKeys.forall(_.matches(UuidV4)),
+      s"generated keys are quarantined with their records: $quarantinedKeys")
 
     fake.failNextRequests.set(0) // the fault clears
     val m = KinesisSink.replayDeadLetters(spark, opts)
     assert(m.recordsSent.value == 2 && m.recordsDropped.value == 0)
     assert(fake.storedPayloads("topic-f").sorted == Seq("y1", "y2"),
       "replay must deliver the quarantined records")
+    assert(fake.stored("topic-f").map(_.partitionKey).sorted ==
+      quarantinedKeys.sorted, "replay re-sends the quarantined keys")
     assert(spark.read.parquet(dlq).count() == 0,
       "replay must remove exactly what it consumed")
     // idempotent on an empty quarantine

@@ -119,9 +119,53 @@ class KinesisTaskRouterSpec extends AnyFunSuite {
       Prop.all(checks.toSeq :+ (slept.isEmpty :| "trailing sleep"): _*)
     })
   }
+
+  test("missing keys are UUIDv4 strings fixed by (write seed, partition id)") {
+    val a = generatedKeys(7L, 3)
+    assert(a == generatedKeys(7L, 3), "same seed and partition, same keys")
+    assert(a.forall(_.matches(UuidV4)), a.find(!_.matches(UuidV4)))
+    // (8, 2) is (7, 3) shifted by one along each axis: a seed that were
+    // the plain sum of the two would repeat (7, 3)'s keys
+    val all = Seq(a, generatedKeys(7L, 4), generatedKeys(8L, 3),
+      generatedKeys(8L, 2), generatedKeys(-7L, 3)).flatten
+    assert(all.distinct.size == all.size, "no key repeats across tasks")
+  }
+
+  test("explicit keys pass through; missing ones do not shift the sequence") {
+    val n = 1000
+    val sent = generatedKeys(7L, 3, n, i => if (i % 3 == 0) s"k$i" else null)
+    assert((0 until n by 3).forall(i => sent(i) == s"k$i"))
+    val generated = sent.indices.filter(_ % 3 != 0).map(sent)
+    assert(generated == generatedKeys(7L, 3, generated.size))
+  }
 }
 
 object KinesisTaskRouterSpec {
+  /** An RFC 4122 version 4 UUID string, as `uuid()` and the reference's
+    * `generateID` (utils.go:15-19) produce.
+    */
+  val UuidV4 = "^[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$"
+
+  /** The keys a router for (`writeSeed`, `partitionId`) sends for `n`
+    * records to one stream, whose keys `key(i)` gives (null: generate).
+    */
+  def generatedKeys(writeSeed: Long, partitionId: Int, n: Int = 100000,
+      key: Int => String = _ => null): Seq[String] = {
+    val sent = ArrayBuffer.empty[String]
+    val client = new KinesisPutRecords {
+      override def putRecords(stream: String,
+          records: Seq[KinesisRecord]): Seq[PutResultEntry] = {
+        sent ++= records.map(_.partitionKey)
+        records.map(_ => PutResultEntry())
+      }
+    }
+    val router = new KinesisTaskRouter(client, KinesisWriterConfig(),
+      Some("s"), writeSeed, partitionId, (_, _, _) => ())
+    (0 until n).foreach(i => router.add(null, key(i), Array.emptyByteArray))
+    router.flush()
+    sent.toSeq
+  }
+
   /** One request's fate: a request error, or the records at the set
     * bits of `mask` fail individually (0: all succeed).
     */
@@ -194,7 +238,7 @@ object KinesisTaskRouterSpec {
     val log = ArrayBuffer.empty[Event]
     val dead = ArrayBuffer.empty[(String, Int, String)]
     val client = new Scripted(c.schedule, log)
-    val router = new KinesisTaskRouter(client, c.config, None,
+    val router = new KinesisTaskRouter(client, c.config, None, 0L, 0,
       (s, rec, why) => dead += ((s, id(rec), why)), ms => log += Slept(ms))
     c.input.foreach { case (s, i) =>
       router.add(s, s"k$i", i.toString.getBytes("UTF-8"))

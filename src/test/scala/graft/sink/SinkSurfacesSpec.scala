@@ -8,11 +8,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.AppendData
 import org.apache.spark.sql.connector.read.streaming.ReportsSinkMetrics
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, V2TableWriteExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
+import graft.sink.KinesisTaskRouterSpec.UuidV4
 
 /** One spec, run against both sink surfaces: `KinesisSink.write` (the
   * foreachBatch path) and `df.write.format("kinesis-graft")` (DSv2).
@@ -36,27 +37,32 @@ class SinkSurfacesSpec extends SparkTestBase {
       .toMap
   })
 
-  // A batch DSv2 write reports through its table's sink metrics; the
-  // table is taken from the write command's plan.
-  private val dsv2 = Surface("dsv2", { (df, opts) =>
-    val tables = new LinkedBlockingQueue[ReportsSinkMetrics]()
+  /** Runs a batch DSv2 write; returns the write command's execution. */
+  private def dsv2Write(df: DataFrame,
+      opts: Map[String, String]): QueryExecution = {
+    val done = new LinkedBlockingQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        qe.analyzed.collectFirst { case a: AppendData => a.table } match {
-          case Some(r: DataSourceV2Relation) =>
-            tables.put(r.table.asInstanceOf[ReportsSinkMetrics])
-          case _ =>
-        }
+        if (qe.analyzed.isInstanceOf[AppendData]) done.put(qe)
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       df.write.format("kinesis-graft").options(opts).mode("append").save()
-      val table = tables.poll(60, TimeUnit.SECONDS)
-      assert(table != null, "no DSv2 write reached the listener")
-      table.metrics().asScala.map { case (k, v) => k -> v.toLong }.toMap
+      val qe = done.poll(60, TimeUnit.SECONDS)
+      assert(qe != null, "no DSv2 write reached the listener")
+      qe
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  // A batch DSv2 write reports through its table's sink metrics; the
+  // table is taken from the write command's plan.
+  private val dsv2 = Surface("dsv2", { (df, opts) =>
+    val table = dsv2Write(df, opts).analyzed.asInstanceOf[AppendData].table
+      .asInstanceOf[DataSourceV2Relation].table
+    table.asInstanceOf[ReportsSinkMetrics].metrics().asScala
+      .map { case (k, v) => k -> v.toLong }.toMap
   })
 
   private def opts(client: String, extra: (String, String)*) =
@@ -83,8 +89,8 @@ class SinkSurfacesSpec extends SparkTestBase {
         opts(client, "stream" -> "topic-a"))
       assert(fake.storedPayloads("topic-a").sorted == msgs.sorted)
       val keys = fake.stored("topic-a").map(_.partitionKey)
-      assert(keys.distinct.size == keys.size && keys.forall(_.length == 36),
-        "each record gets its own uuid key")
+      assert(keys.distinct.size == keys.size && keys.forall(_.matches(UuidV4)),
+        "each record gets its own UUIDv4 key")
       assert(got("recordsSent") == 1234 && got("recordsDropped") == 0)
       assert(got("putRequests") >= 3, "at most 500 records per request")
     }
@@ -127,8 +133,8 @@ class SinkSurfacesSpec extends SparkTestBase {
       val keys = (fake.stored("dflt") ++ fake.stored("s1"))
         .map(r => new String(r.data, "UTF-8") -> r.partitionKey).toMap
       assert(keys("p0") == "k0" && keys("p3") == "k3")
-      assert(Seq("p1", "p2").forall(p => keys(p).matches("[0-9a-f-]{36}")),
-        s"null keys get uuids: $keys")
+      assert(Seq("p1", "p2").forall(p => keys(p).matches(UuidV4)),
+        s"null keys get UUIDv4 keys: $keys")
       val e = intercept[Exception](s.write(df, opts(client)))
       assert(causes(e).contains("no default stream option"), causes(e))
     }
@@ -146,5 +152,22 @@ class SinkSurfacesSpec extends SparkTestBase {
       assert(got == Map("recordsSent" -> 19L, "recordsDropped" -> 1L,
         "kinesisErrors" -> 0L, "putRequests" -> 2L))
     }
+  }
+
+  test("dsv2: the write node's SQL metrics count each partition's last batch") {
+    fresh("surfaces-sql-metrics")
+    import spark.implicits._
+    // two partitions of 617 records: 500 flushed while writing, 117 at
+    // the end of each task
+    val df = spark.range(0, 1234, 1, 2).select($"id".cast("string")
+      .cast("binary").as("data"))
+    val qe = dsv2Write(df,
+      opts("surfaces-sql-metrics", "stream" -> "sql-metrics"))
+    val sql = qe.executedPlan.collectFirst { case w: V2TableWriteExec =>
+      w.metrics.collect { case (n, m) if WriteStats.names.contains(n) =>
+        n -> m.value }
+    }.getOrElse(fail(s"no V2 write node in ${qe.executedPlan}"))
+    assert(sql == Map("recordsSent" -> 1234L, "recordsDropped" -> 0L,
+      "kinesisErrors" -> 0L, "putRequests" -> 4L), sql)
   }
 }
