@@ -74,6 +74,27 @@ object Bench {
     */
   private[graft] def lineExemptNow(name: String, secs: Double): Boolean =
     LineExempt(name) && secs >= 0 && secs < 1.5
+  /** A timing as the line prints it (see the window notes in `main`):
+    * one decimal with ".0" stripped below 3 s, whole seconds above.
+    */
+  private[graft] def fmt(v: Double): String = {
+    if (v >= 3 || v <= -3) return math.round(v).toString
+    val s = "%.1f".formatLocal(java.util.Locale.ROOT, v)
+    if (s.endsWith(".0")) s.dropRight(2) else s
+  }
+
+  /** The one-line JSON the driver parses; `contExtra` is the optional
+    * `,"wx":…,"rep":…` part, and `,"qdrop":N` rides when `dropped > 0`.
+    */
+  private[graft] def jsonLine(total: String, contended: Boolean,
+      contExtra: String, entries: Seq[(String, Double)], dropped: Int,
+      sf: String): String = {
+    val qs = entries.map { case (kk, v) => "\"" + kk + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val dropExtra = if (dropped > 0) s""","qdrop":$dropped""" else ""
+    s"""{"metric":"total","value":$total,"unit":"sec","cont":$contended$contExtra$dropExtra,"queries":$qs,"sf":$sf}"""
+  }
+
   private[graft] def shortKey(name: String): String = {
     val code = name.takeWhile(_ != '_')
     val digits = code.drop(1)
@@ -221,11 +242,6 @@ object Bench {
     // that size dwarfs the rounded 0.5 s; the sidecar keeps 2-dp): under
     // driver-box contention (BENCH_r02 had a 49.9 s outlier) extra
     // decimals were the chars that pushed the line over the window
-    def f(v: Double): String = {
-      if (v >= 3 || v <= -3) return math.round(v).toString
-      val s = "%.1f".formatLocal(java.util.Locale.ROOT, v)
-      if (s.endsWith(".0")) s.dropRight(2) else s
-    }
     val short = results.map { case (k, v) => Bench.shortKey(k) -> v }
     val keys =
       if (short.map(_._1).distinct.size == short.size) short
@@ -283,8 +299,8 @@ object Bench {
     try {
       val p = java.nio.file.Paths.get(sidecarPath).toAbsolutePath
       java.nio.file.Files.writeString(p,
-        s"""{"sf":$sf,"pass_totals":[${passTots.map(f).mkString(",")}],""" +
-          s""""contended":$preContended,"warm_excess":${f(preExcess)},""" +
+        s"""{"sf":$sf,"pass_totals":[${passTots.map(fmt).mkString(",")}],""" +
+          s""""contended":$preContended,"warm_excess":${fmt(preExcess)},""" +
           s""""repaired":$repaired,"passes":$passesJson}""" + "\n")
       System.err.println(s"[bench] sidecar written: $p")
     } catch { case e: Throwable =>
@@ -292,10 +308,10 @@ object Bench {
     }
     // wx/rep ride the line only when they carry information (a clean
     // run's ",\"wx\":0,\"rep\":0" is 16 dead chars of tail window) —
-    // and a sub-0.05 excess would PRINT as "wx":0 through f(), so the
+    // and a sub-0.05 excess would PRINT as "wx":0 through fmt(), so the
     // threshold matches the formatter's resolution
     val contExtra =
-      (if (preExcess >= 0.05) s""","wx":${f(preExcess)}""" else "") +
+      (if (preExcess >= 0.05) s""","wx":${fmt(preExcess)}""" else "") +
       (if (repaired > 0) s""","rep":$repaired""" else "")
     // OVERFLOW GUARD for the tail window: the board grows every round
     // (185 queries → 1725 chars; the worst case — every value ≥ 10 s —
@@ -307,12 +323,8 @@ object Bench {
     // nothing is lost — only the line's redundancy is shed. Dropping
     // deterministically (value asc, key asc) keeps identical runs
     // emitting identical lines.
-    def lineOf(entries: Seq[(String, Double)], dropped: Int): String = {
-      val qs = entries.map { case (kk, v) => "\"" + kk + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      val dropExtra = if (dropped > 0) s""","qdrop":$dropped""" else ""
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","cont":$preContended$contExtra$dropExtra,"queries":$qs,"sf":$sf}"""
-    }
+    def lineOf(entries: Seq[(String, Double)], dropped: Int): String =
+      jsonLine(fmt(total), preContended, contExtra, entries, dropped, sf)
     // leave slack under the driver's 2000-char tail; env-overridable
     // so the drop path is exercisable without a 200-query board
     val LineBudget = sys.env.get("SPARK_GRAFT_LINE_BUDGET")

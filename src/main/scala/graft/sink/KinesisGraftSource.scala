@@ -173,8 +173,11 @@ private[sink] final class KinesisGraftMicroBatchStream(
     * operator alarms on (`recordsBehindLatest`, the Kinesis
     * MillisBehindLatest analogue in records) plus the reshard-follow
     * state (active vs retired shard counts, which move exactly when a
-    * split/merge is being drained). Driver-side only: one
-    * latestSequence probe per active shard at progress-reporting time.
+    * split/merge is being drained). The backlog is measured against the
+    * shard ends `latestOffset` read while planning this trigger (Kafka's
+    * `latestPartitionOffsets` pattern), so it is the backlog as of
+    * planning time and costs no second end-of-shard probe: real Kinesis
+    * pays one call per probe against a 5-reads/s-per-shard limit.
     */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset])
       : java.util.Map[String, String] = {
@@ -184,8 +187,9 @@ private[sink] final class KinesisGraftMicroBatchStream(
         case k: KinesisSourceOffset => k
         case other => KinesisSourceOffset.fromJson(other.json())
       }
+      val ends = plannedEnds
       val behind = off.shardOffsets.map { case (sh, p) =>
-        math.max(0L, client.latestSequence(stream, sh) - p)
+        math.max(0L, ends.getOrElse(sh, p) - p)
       }.sum
       m.put("recordsBehindLatest", behind.toString)
       m.put("activeShards", off.shardOffsets.size.toString)
@@ -193,6 +197,13 @@ private[sink] final class KinesisGraftMicroBatchStream(
     }
     m
   }
+
+  /** Each active shard's drain target as read by the last
+    * `latestOffset(start, limit)`; what [[metrics]] measures the backlog
+    * against.
+    */
+  @volatile private var plannedEnds: Map[String, Long] = Map.empty
+
   // Driver-side client: shard discovery + end-of-shard probes only; the
   // data plane runs in executor-side partition readers.
   @transient private lazy val client = KinesisSinkOptions.resolveReadClient(opts)
@@ -347,6 +358,7 @@ private[sink] final class KinesisGraftMicroBatchStream(
     val targets = from.map { case (sh, p) =>
       sh -> math.max(p, client.latestSequence(stream, sh))
     }
+    plannedEnds = targets
     if (maxPerTrigger <= 0) KinesisSourceOffset(targets, done)
     else {
       val lags = targets.toSeq.map { case (shard, end) =>
@@ -464,13 +476,17 @@ private[sink] final class KinesisPartitionReader(p: KinesisInputPartition)
   private var page: Iterator[ShardRecord] = Iterator.empty
   private var exhausted = false
   private var current: ShardRecord = _
+  // the sequence after the last record fetched; a page asks for at most
+  // the rest of the window, so the reader never reads past endSeq
+  private var nextSeq = p.startSeq
+  private[sink] def fetchedTo: Long = nextSeq
 
   private val streamUtf8 = UTF8String.fromString(p.stream)
   private val shardUtf8 = UTF8String.fromString(p.shardId)
 
-  @scala.annotation.tailrec
   private def fetchPage(): Unit = {
-    val res = client.getRecords(iterator, p.fetchLimit)
+    val res = client.getRecords(iterator,
+      math.min(p.fetchLimit.toLong, p.endSeq - nextSeq).toInt)
     iterator = res.nextIterator
     if (res.records.isEmpty) {
       // The KinesisGetRecords CONTRACT guarantees an empty page means
@@ -480,12 +496,12 @@ private[sink] final class KinesisPartitionReader(p: KinesisInputPartition)
       // below it can still arrive.
       exhausted = true
     } else {
-      val inWindow = res.records.takeWhile(_.sequenceNumber < p.endSeq)
-      // Crossing endSeq means records past the planned window exist
-      // already — this slice is done; they belong to the next batch.
-      if (inWindow.size < res.records.size) exhausted = true
-      if (inWindow.nonEmpty) page = inWindow.iterator
-      else if (!exhausted) fetchPage()
+      nextSeq = res.records.last.sequenceNumber + 1
+      // Reaching endSeq means the planned window is read: this slice is
+      // done, without an empty page, and any record past it belongs to
+      // the next batch.
+      if (nextSeq >= p.endSeq) exhausted = true
+      page = res.records.iterator.takeWhile(_.sequenceNumber < p.endSeq)
     }
   }
 

@@ -37,19 +37,32 @@ object MemoryGate {
     */
   private val StatePartitions = "8"
 
-  /** State store backend for every gated run: RocksDB, not the default
-    * heap-backed HDFSBackedStateStore. The default keeps every key of
-    * every stateful operator's state ON HEAP per executor — at 100 TB
-    * stream-stream join state (e19/e21/e26/e29) that is an executor-OOM
-    * waiting for a skewed key, and GC pressure long before that.
-    * RocksDB spills state to local disk with a bounded block cache, and
-    * changelog checkpointing ships per-batch deltas instead of
-    * re-uploading full SST snapshots — the production configuration for
-    * large-state Structured Streaming. Correctness is backend-invariant
-    * (the oracle hash gate proves it per query); only the memory
-    * ceiling moves.
+  /** Session confs for every gated run (and the test session, which
+    * applies the same list).
+    *
+    * State store backend: RocksDB, not the default heap-backed
+    * HDFSBackedStateStore. The default keeps every key of every stateful
+    * operator's state ON HEAP per executor — at 100 TB stream-stream
+    * join state (e19/e21/e26/e29) that is an executor-OOM waiting for a
+    * skewed key, and GC pressure long before that. RocksDB spills state
+    * to local disk with a bounded block cache, and changelog
+    * checkpointing ships per-batch deltas instead of re-uploading full
+    * SST snapshots — the production configuration for large-state
+    * Structured Streaming. Correctness is backend-invariant (the oracle
+    * hash gate proves it per query); only the memory ceiling moves.
+    *
+    * Checkpoint files: a gate sets no checkpoint location, so Spark
+    * writes its offset log, commit log and state under a temporary
+    * `temporary-<uuid>` directory in `java.io.tmpdir` and deletes it
+    * when the query stops. That is a local (`file:`) path, which Spark
+    * would write through Hadoop's local file system; without Hadoop's
+    * native IO library that forks `chmod`/`ls` several times per file,
+    * and those forks, not RocksDB, were most of a small gate's
+    * per-batch cost. [[LocalCheckpointFileManager]] writes the same
+    * files with java.nio (one rename per file) and leaves non-local
+    * paths to Spark's own managers.
     */
-  val StateStoreConfs: Seq[(String, String)] = Seq(
+  val GateConfs: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
@@ -60,7 +73,9 @@ object MemoryGate {
     // results are identical (the hash gate proves it per query); the
     // documented production knob for commit-latency-sensitive jobs.
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-      "false")
+      "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName)
 
   /** ONE isolated gate session per (SparkContext, conf signature),
     * shared by every gate that needs that exact conf set — the r11
@@ -69,7 +84,7 @@ object MemoryGate {
     * extension re-application) once per gated query for confs that are
     * IDENTICAL across the family; the cache pays it once per JVM. The
     * isolation argument is unchanged: the gate confs (8 state
-    * partitions, RocksDB backend, the complete-mode no-data skip)
+    * partitions, [[GateConfs]], the complete-mode no-data skip)
     * live on the cached clone only and never leak to the caller's
     * session. Nothing STATEFUL is shared between gates on the clone:
     * each streaming query still gets its own checkpoint + state
@@ -101,7 +116,7 @@ object MemoryGate {
     gateSessions.computeIfAbsent(key, _ => {
       val g = s.newSession()
       g.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      StateStoreConfs.foreach { case (k, v) => g.conf.set(k, v) }
+      GateConfs.foreach { case (k, v) => g.conf.set(k, v) }
       // COMPLETE-mode gates don't need the no-data finalizing batch:
       // it exists to advance the watermark so APPEND-mode operators
       // can emit/evict their closed regions, but complete mode

@@ -10,11 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (a collision silently falls back to 3-char full codes, which
   *    re-risks the driver's 2000-char tail-window overflow that ate
   *    BENCH_r01/r02);
-  *  - the line's worst case is survivable: even if EVERY query
-  *    printed a 4-char value ("99.9"-class — far beyond any quiet
-  *    board), the overflow guard's drop-cheapest loop has room to
-  *    operate because the fixed preamble + per-entry overhead stays
-  *    well under the tail window for the guard's kept set.
+  *  - the line's worst case fits the bench's line budget: the kept
+  *    set at the widest values the formatter prints, with every
+  *    optional extra present, so no run falls back to the
+  *    value-ordered drop that churns the key set.
   */
 class BenchLineSpec extends AnyFunSuite {
 
@@ -40,21 +39,31 @@ class BenchLineSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"LineExempt names queries that no longer exist (a rename would " +
         s"silently re-churn the emitted key set): $stale")
-    // sizing: at the typical 3-char value width ("0.5"/"1.2") a kept
-    // entry costs 9 chars ("xx":0.5,), so the kept set must leave the
-    // line inside the driver's 2000-char tail with preamble — the
-    // simulated clean r15 board lands at 1889 chars. A board that
-    // grows past this bound needs more exempt designations BEFORE the
-    // value-ordered fallback starts churning the key set again.
-    // bound against the bench's 1900-char LineBudget, not the raw
-    // 2000-char tail window: the value-ordered churn this set exists
-    // to prevent comes back as soon as the line exceeds the BUDGET
-    val keptN = names.size - Bench.LineExempt.size
-    val typical = 120 + keptN * 9
-    assert(typical <= 1900,
-      s"kept set too large for the line budget at typical value " +
-        s"widths: $keptN entries -> ~$typical chars; designate more " +
-        "exempt rows")
+    // sizing: the widest line the kept set can print must fit the
+    // bench's 1900-char LineBudget (not the raw 2000-char tail window:
+    // the value-ordered churn this set exists to prevent comes back as
+    // soon as the line exceeds the BUDGET). Built with Bench's own
+    // formatter, every part at its widest:
+    //  - each kept row at the widest value fmt prints below 100 s
+    //    (3 chars, "2.9"; from 3 s up it prints whole seconds);
+    //  - the total and wx at 4 chars (a >= 1000 s board), rep at the
+    //    board size, the qdrop extra that is always present, the
+    //    longer sf;
+    //  - two exempt rows riding the line through the safety valve
+    //    (say one failure and one slow row) without starting churn.
+    // A board that grows past this needs more exempt designations
+    // BEFORE the value-ordered fallback starts churning the key set.
+    val riding = Bench.LineExempt.toSeq.sorted.take(2)
+    val onLine = names.toSeq.sorted
+      .filter(n => !Bench.LineExempt(n) || riding.contains(n))
+    val worst = Bench.jsonLine("9999", contended = false,
+      s""","wx":9999,"rep":${names.size}""",
+      onLine.map(n => Bench.shortKey(n) -> 2.9),
+      dropped = names.size - onLine.size, sf = "0.01")
+    assert(worst.length <= 1900,
+      s"kept set too large for the line budget at worst-case widths: " +
+        s"${onLine.size} entries -> ${worst.length} chars; designate " +
+        "more exempt rows")
     // healthy-and-trivial gate: a failed or expensive exempt row must
     // ride the line (regressions are never hidden by the exemption)
     assert(!Bench.lineExemptNow("t01_token_stats", -1.0))

@@ -78,10 +78,11 @@ object SparkTestBase {
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Same state-store backend as the MemoryGate production gates:
-    // every stateful streaming spec (sessionizer, dedup, watermark,
-    // sink restart) exercises RocksDB, not the heap-backed default.
-    .config(graft.streaming.MemoryGate.StateStoreConfs.toMap)
+    // Same confs as the MemoryGate production gates: every stateful
+    // streaming spec (sessionizer, dedup, watermark, sink restart)
+    // exercises RocksDB, not the heap-backed default, and writes its
+    // checkpoint through LocalCheckpointFileManager.
+    .config(graft.streaming.MemoryGate.GateConfs.toMap)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

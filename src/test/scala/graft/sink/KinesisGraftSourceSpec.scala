@@ -668,6 +668,41 @@ class KinesisGraftSourceSpec extends SparkTestBase {
     } finally { q.stop(); q.awaitTermination(30000) }
   }
 
+  test("one end-of-shard probe per shard per trigger: the backlog gauge " +
+      "reuses the ends planning read, and a slice reader stops at its " +
+      "window's end") {
+    val fake = FakeKinesis.named("src-plan-ends")
+    fake.clear()
+    fake.numShards.set(2)
+    put(fake, "pe", (0 until 40).map(i => s"m$i"))
+    val opts = KinesisSinkOptions.fromMap(Map(
+      "aws_region_name" -> "us-east-1", "stream" -> "pe",
+      "client" -> "fake:src-plan-ends"))
+    val ms = new KinesisGraftMicroBatchStream(opts, "TRIM_HORIZON", 10000, 10)
+    val start = ms.initialOffset()
+    val end = ms.latestOffset(start,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(10))
+    // records that arrive after planning are the next trigger's news
+    put(fake, "pe", (0 until 25).map(i => s"late$i"))
+    val m = ms.metrics(java.util.Optional.of(end))
+    assert(m.get("recordsBehindLatest") == "30",
+      s"40 planned-visible records, 10 admitted: $m")
+    // each slice is far smaller than a page and its shard holds more:
+    // the reader must fetch exactly its window, not a full page
+    val parts = ms.planInputPartitions(start, end)
+      .map(_.asInstanceOf[KinesisInputPartition])
+    assert(parts.map(p => p.endSeq - p.startSeq).sum == 10)
+    parts.foreach { part =>
+      val r = new KinesisPartitionReader(part)
+      var n = 0L
+      while (r.next()) n += 1
+      assert(n == part.endSeq - part.startSeq)
+      assert(r.fetchedTo == part.endSeq,
+        s"${part.shardId}: read to ${r.fetchedTo}, window ends at " +
+          s"${part.endSeq}")
+    }
+  }
+
   test("source option validation: missing stream fails fast") {
     val e = intercept[Exception] {
       spark.read.format("kinesis-graft")

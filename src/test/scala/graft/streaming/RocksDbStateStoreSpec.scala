@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -17,12 +19,45 @@ import graft.SparkTestBase
 class RocksDbStateStoreSpec extends SparkTestBase {
 
   test("MemoryGate confs name the RocksDB provider and the class loads") {
-    val provider = MemoryGate.StateStoreConfs.toMap
+    val provider = MemoryGate.GateConfs.toMap
       .apply("spark.sql.streaming.stateStore.providerClass")
     assert(provider.contains("RocksDBStateStoreProvider"))
     // fail here, not at the first gated query, if the class name rots
     Class.forName(provider)
     ()
+  }
+
+  test("MemoryGate confs name the local checkpoint file manager, the " +
+      "class loads, and a stopped query's checkpoint holds no temp file") {
+    val cls = MemoryGate.GateConfs.toMap
+      .apply("spark.sql.streaming.checkpointFileManagerClass")
+    // Spark instantiates it by this exact constructor
+    Class.forName(cls).getConstructor(classOf[org.apache.hadoop.fs.Path],
+      classOf[org.apache.hadoop.conf.Configuration])
+    // a gate's own checkpoint is a temporary directory Spark deletes at
+    // stop, so the same conf list (the test session's) runs here with a
+    // checkpoint location that survives the query
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val ckpt = tmpDir("rocksdb-ckpt")
+    val source = MemoryStream[Long]
+    val q = source.toDF().groupBy(($"value" % 3).as("k")).count()
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("ckpt_manager_probe")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      source.addData(1L, 2L, 3L); q.processAllAvailable()
+      source.addData(4L, 5L); q.processAllAvailable()
+    } finally { q.stop(); q.awaitTermination(30000) }
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      .iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!files.exists(_.endsWith(".tmp")), s"temp files left: $files")
+    // Hadoop's local FS writes a .crc beside each file; none here means
+    // the offset and commit logs went through the NIO manager
+    assert(files.contains("0") && files.contains("1"), files)
+    assert(!files.exists(f => f == ".0.crc" || f == ".1.crc"),
+      s"log files written through Hadoop's local FS: $files")
+    assert(spark.table("ckpt_manager_probe").count() == 3)
   }
 
   test("a stateful streaming query reports RocksDB state-store metrics") {
