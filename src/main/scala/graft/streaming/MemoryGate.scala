@@ -61,6 +61,18 @@ object MemoryGate {
     * per-batch cost. [[LocalCheckpointFileManager]] writes the same
     * files with java.nio (one rename per file) and leaves non-local
     * paths to Spark's own managers.
+    *
+    * Artifact isolation off: Spark caches generated classes
+    * (`CodeGenerator.compile`) per task context class loader as well as
+    * per source, and every streaming query runs on a clone of its
+    * session with a new session UUID, for which executors build a new
+    * isolated class loader (`Executor.isolatedSessionCache`). With
+    * isolation on, every gate run therefore missed the cache and its
+    * tasks waited on Janino recompiling every class the cold run had
+    * already compiled (11 per warm e07). Isolation keeps jars, files and
+    * classes added to one session out of another; gate sessions add
+    * none, so it protects nothing here, and with it off a warm gate
+    * compiles nothing.
     */
   val GateConfs: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
@@ -75,7 +87,8 @@ object MemoryGate {
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
       "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[LocalCheckpointFileManager].getName)
+      classOf[LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** ONE isolated gate session per (SparkContext, conf signature),
     * shared by every gate that needs that exact conf set — the r11

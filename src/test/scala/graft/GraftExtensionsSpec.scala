@@ -239,26 +239,9 @@ class GraftExtensionsSpec extends SparkTestBase {
         Seq("spark"), qv, 5, 5)) ==
       ops.SqlServing.hybridSchema.map(f => (f.name, f.dataType)).toSeq)
 
-    // drain in-flight listener events from the index builds above,
-    // then count every job started while analyzing/EXPLAINing
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
-      ()
-    }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    drain()
-    spark.sparkContext.addSparkListener(l)
-    try {
+    // count every job started while analyzing/EXPLAINing (the index
+    // builds above are drained first)
+    val (_, jobs) = countingJobs {
       // EXPLAIN all four TVFs + a repeated re-analysis (the view
       // shape) + a schema probe (the BI-tool shape)
       fresh.sql(s"EXPLAIN EXTENDED SELECT * FROM " +
@@ -284,11 +267,10 @@ class GraftExtensionsSpec extends SparkTestBase {
         s"SELECT * FROM graft_ann('$annIdx', '$csv', 5)").schema
       assert(probed.map(f => (f.name, f.dataType)) ==
         ops.SqlServing.annSchema.map(f => (f.name, f.dataType)))
-      drain()
-      assert(jobs.get == 0,
-        s"EXPLAIN/analysis of the serving TVFs must run zero Spark " +
-          s"jobs, ran ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs == 0,
+      s"EXPLAIN/analysis of the serving TVFs must run zero Spark " +
+        s"jobs, ran $jobs")
 
     // execution still produces the Scala twin's rows (the deferred
     // build calls the same entry point at run time)

@@ -178,34 +178,13 @@ class SaltedAggSpec extends SparkTestBase {
 
   test("auto under budget: direct plan, ZERO sizing jobs (the " +
       "stats-first rung — the containment/ANN switch discipline)") {
-    val sc = spark.sparkContext
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
-      ()
-    }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val ev = events // the parquet footer read happens HERE, not below
-    drain()
-    sc.addSparkListener(l)
-    try {
-      // constructing the auto plan under budget must not size by job:
-      // the scan estimate answers for free
-      val out = Events.saltedAggAuto(spark, ev, Seq("event_type"),
-        Seq(Events.SaltCount("n")))
-      drain()
-      assert(jobs.get === 0,
-        s"sub-budget auto construction ran ${jobs.get} sizing jobs")
-      assert(out.columns.toSeq === Seq("event_type", "n"))
-    } finally sc.removeSparkListener(l)
+    // constructing the auto plan under budget must not size by job:
+    // the scan estimate answers for free
+    val (out, jobs) = countingJobs(Events.saltedAggAuto(spark, ev,
+      Seq("event_type"), Seq(Events.SaltCount("n"))))
+    assert(jobs === 0, s"sub-budget auto construction ran $jobs sizing jobs")
+    assert(out.columns.toSeq === Seq("event_type", "n"))
   }
 
   test("null semantics survive the two-phase rewrite: sum/min/max " +

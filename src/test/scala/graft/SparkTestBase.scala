@@ -16,11 +16,6 @@ trait SparkTestBase extends AnyFunSuite {
     */
   protected val streamingGated: Set[String] = SparkEntry.streamingGated
 
-  /** Run `body` with session confs overridden, restoring (or unsetting)
-    * every key afterwards — the session is shared JVM-wide across
-    * suites, so any conf override MUST go through here or it leaks into
-    * whichever suite runs next.
-    */
   /** Fresh temp directory, recursively deleted at JVM exit (File
     * .deleteOnExit never removes non-empty directories, so the ad-hoc
     * per-suite variants of this helper leaked fixture-sized data every
@@ -32,6 +27,39 @@ trait SparkTestBase extends AnyFunSuite {
     d.toString
   }
 
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * Drains the listener bus before and after, so jobs of earlier work
+    * are not counted and jobs of `body` are.
+    */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethods.find(m =>
+        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .get.invoke(bus)
+      ()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain()
+    sc.addSparkListener(l)
+    val out =
+      try { val r = body; drain(); r }
+      finally sc.removeSparkListener(l)
+    (out, jobs.get)
+  }
+
+  /** Run `body` with session confs overridden, restoring (or unsetting)
+    * every key afterwards — the session is shared JVM-wide across
+    * suites, so any conf override MUST go through here or it leaks into
+    * whichever suite runs next.
+    */
   def withConfs(kv: (String, String)*)(body: => Unit): Unit = {
     val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -80,8 +108,9 @@ object SparkTestBase {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Same confs as the MemoryGate production gates: every stateful
     // streaming spec (sessionizer, dedup, watermark, sink restart)
-    // exercises RocksDB, not the heap-backed default, and writes its
-    // checkpoint through LocalCheckpointFileManager.
+    // exercises RocksDB, not the heap-backed default, writes its
+    // checkpoint through LocalCheckpointFileManager, and reuses the
+    // generated classes of earlier queries (artifact isolation off).
     .config(graft.streaming.MemoryGate.GateConfs.toMap)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
