@@ -1,7 +1,9 @@
 package graft.sink
 
+import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -154,6 +156,12 @@ trait KinesisPutRecords extends Serializable {
   * A JVM-wide registry (`FakeKinesis.named`) lets serialized Spark tasks
   * in local mode share one store with the driver: the task serializes
   * only the name, and resolves the shared instance lazily per-JVM.
+  *
+  * Read cost model, what the real service charges per call: an
+  * end-of-shard probe ([[latestSequence]], a `LATEST` iterator) is O(1),
+  * a [[getRecords]] page is O(page), and [[sequenceAtTimestamp]] is
+  * O(log shard length). Each runs under the per-stream lock on the live
+  * log, and each page is a copy that later appends cannot change.
   */
 final class FakeKinesis(val latencyMs: Long = 0L)
     extends KinesisPutRecords with KinesisGetRecords {
@@ -239,8 +247,7 @@ final class FakeKinesis(val latencyMs: Long = 0L)
 
   private def hashOf(pk: String): BigInt =
     BigInt(new java.math.BigInteger(1,
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(pk.getBytes("UTF-8"))))
+      FakeKinesis.md5.get().digest(pk.getBytes("UTF-8"))))
 
   override def putRecords(stream: String,
       records: Seq[KinesisRecord]): Seq[PutResultEntry] = {
@@ -382,11 +389,17 @@ final class FakeKinesis(val latencyMs: Long = 0L)
     }
   }
 
-  private def shardLog(stream: String,
-      shardId: String): Seq[(KinesisRecord, Long)] = {
+  /** `f` applied to the shard's live log under the stream lock, or
+    * `ifUnknown` for a shard id the stream does not have. `f` must copy
+    * out whatever it returns: the log keeps growing after the lock is
+    * released.
+    */
+  private def withLog[A](stream: String, shardId: String, ifUnknown: => A)(
+      f: ArrayBuffer[(KinesisRecord, Long)] => A): A = {
     val st = state(stream)
     st.synchronized {
-      Option(st.shards.get(shardId)).map(_.log.toSeq).getOrElse(Seq.empty)
+      val s = st.shards.get(shardId)
+      if (s == null) ifUnknown else f(s.log)
     }
   }
 
@@ -394,7 +407,7 @@ final class FakeKinesis(val latencyMs: Long = 0L)
       iteratorType: String, startingSequence: Long): String = {
     val start = iteratorType match {
       case "TRIM_HORIZON" => 0L
-      case "LATEST" => shardLog(stream, shardId).size.toLong
+      case "LATEST" => latestSequence(stream, shardId)
       case "AT_SEQUENCE_NUMBER" => startingSequence
       case "AFTER_SEQUENCE_NUMBER" => startingSequence + 1
       case other => throw new IllegalArgumentException(
@@ -405,24 +418,36 @@ final class FakeKinesis(val latencyMs: Long = 0L)
 
   override def getRecords(iterator: String, limit: Int): GetRecordsResult = {
     val Array(stream, shardId, startStr) = iterator.split('|')
-    val log = shardLog(stream, shardId) // immutable snapshot
-    val start = startStr.toLong.toInt
-    val slice = log.slice(start, math.min(log.size, start + limit))
-    val out = slice.zipWithIndex.map { case ((r, at), i) =>
-      ShardRecord((start + i).toLong, r, at)
+    val start = math.max(startStr.toLong.toInt, 0)
+    val page = withLog(stream, shardId, Array.empty[ShardRecord]) { log =>
+      val end = math.min(log.size.toLong, start.toLong + limit).toInt
+      Array.tabulate(math.max(end - start, 0)) { i =>
+        val (r, at) = log(start + i)
+        ShardRecord((start + i).toLong, r, at)
+      }
     }
-    GetRecordsResult(out, s"$stream|$shardId|${start + slice.size}")
+    GetRecordsResult(ArraySeq.unsafeWrapArray(page),
+      s"$stream|$shardId|${start + page.length}")
   }
 
   override def latestSequence(stream: String, shardId: String): Long =
-    shardLog(stream, shardId).size.toLong
+    withLog(stream, shardId, 0L)(_.size.toLong)
 
+  /** Binary search for the first arrival at or after `epochMs`: each
+    * shard's arrival stamps come from [[clock]] in append order, so they
+    * are monotone.
+    */
   override def sequenceAtTimestamp(stream: String, shardId: String,
-      epochMs: Long): Long = {
-    val log = shardLog(stream, shardId)
-    val i = log.indexWhere(_._2 >= epochMs)
-    if (i < 0) log.size.toLong else i.toLong
-  }
+      epochMs: Long): Long =
+    withLog(stream, shardId, 0L) { log =>
+      var lo = 0
+      var hi = log.size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (log(mid)._2 < epochMs) lo = mid + 1 else hi = mid
+      }
+      lo.toLong
+    }
 }
 
 object FakeKinesis {
@@ -435,4 +460,10 @@ object FakeKinesis {
     registry.computeIfAbsent(name, _ => new FakeKinesis())
 
   def drop(name: String): Unit = registry.remove(name)
+
+  /** One MD5 digest per thread for shard routing: `digest` resets it, and
+    * `getInstance` on every record costs a provider lookup.
+    */
+  private val md5 = ThreadLocal.withInitial[MessageDigest](
+    () => MessageDigest.getInstance("MD5"))
 }

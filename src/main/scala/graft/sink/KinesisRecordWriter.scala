@@ -92,10 +92,14 @@ object KinesisEventListener {
   *    with an error event (batchproducer.go:445-453);
   *  - stats counters per `StatsBatch` (batchproducer.go:458-470).
   *
-  * Deliberate improvement: the reference re-enqueues failed records via
-  * goroutines and documents that this breaks ordering
-  * (batchproducer.go:360,423-426,434-437); here retries happen in-task
-  * and in-place, so intra-partition order is preserved.
+  * Ordering: the reference re-enqueues failed records via goroutines and
+  * documents that this breaks ordering (batchproducer.go:360,423-426,
+  * 434-437); here retries happen in-task, so order holds per batch:
+  * batches go out in input order, and within a batch the records
+  * delivered in one round keep their input order. A record that fails
+  * on its own is re-sent after the later records of its batch, as
+  * PutRecords partial failures behave. With no per-record failures the
+  * delivered order is the input order itself.
   *
   * `sleep` is injectable so tests assert the backoff schedule against a
   * recorded clock instead of wall time (the reference's tests assert

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-task writer: config validation, size-triggered batching, backoff
   * schedule on request errors, consecutive-error counting with reset,
   * load-shed vs fail policy, selective per-record retry with attempt cap,
-  * stats counters — plus our stronger guarantee, intra-partition order.
+  * stats counters — plus our stronger guarantee, input order across
+  * request-level retries (per-record failures keep order per batch only;
+  * `KinesisTaskRouterSpec` checks that form).
   * Timing-window asserts from the reference (6–16 ms wall-clock,
   * :734-808) become recorded-clock asserts via the injectable `sleep`.
   */
